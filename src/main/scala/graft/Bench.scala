@@ -298,10 +298,10 @@ object Bench {
         } finally spark.conf.set(key, saved)
       }
 
-    // Ingest-loop probe (round 7): one incremental-dedup commit of a 1k-doc
-    // batch against an 8k-doc parquet history through the BUCKETED band
-    // store (the exchange-free history-band path) — re-measured because the
-    // band store changed the per-batch plan. Fresh temp store per run.
+    // Ingest-loop probe: one incremental-dedup commit of a 1k-doc batch
+    // (store batch id 1) against an 8k-doc history (batch id 0) through
+    // the batch-partitioned store's one commit path. Fresh temp store per
+    // run.
     val ingestStats: Option[String] =
       if (extractOnly || sys.env.get("SPARK_GRAFT_INGEST").contains("0")) None
       else {
@@ -309,8 +309,6 @@ object Bench {
         val batchN = sys.env.get("SPARK_GRAFT_INGEST_BATCH").map(_.toInt).getOrElse(1000)
         val dir = java.nio.file.Files.createTempDirectory("graft-bench-incdedup-")
           .toAbsolutePath.toString
-        val tbl = "graft_bench_bands_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
         try {
           def corpus(from: Int, n: Int) = spark.range(from, from + n.toLong)
             .selectExpr("CAST(id AS STRING) AS doc",
@@ -319,17 +317,16 @@ object Bench {
                 "repeat(concat('w', CAST(id % 211 AS STRING), ' x', CAST(id % 97 AS STRING), " +
                 "' y', CAST(id % 53 AS STRING), ' '), 10), " +
                 "CASE WHEN id % 50 = 0 THEN 'tail common suffix block' ELSE '' END) AS body")
-          graft.ops.IncrementalDedup.dedupeAndCommitIndexed(
-            corpus(0, histN).toDF(), "doc", "body", dir, tbl) // build history
+          graft.ops.IncrementalDedup.dedupeAndCommit(
+            corpus(0, histN).toDF(), "doc", "body", dir, 0L) // build history
           val t0 = System.nanoTime()
-          val led = graft.ops.IncrementalDedup.dedupeAndCommitIndexed(
-            corpus(histN, batchN).toDF(), "doc", "body", dir, tbl)
+          val led = graft.ops.IncrementalDedup.dedupeAndCommit(
+            corpus(histN, batchN).toDF(), "doc", "body", dir, 1L)
           val cnt = led.count()
           val sec = (System.nanoTime() - t0) / 1e9
           System.err.println(f"[bench] ingest probe: $cnt%d-doc batch vs $histN%d-doc history committed in $sec%.2f s")
           Some(f"""{"history":$histN%d,"batch":$batchN%d,"commit_sec":$sec%.3f,"docs_per_sec":${cnt / sec}%.1f}""")
         } finally {
-          spark.sql(s"DROP TABLE IF EXISTS $tbl")
           try {
             import scala.reflect.io.Directory
             new Directory(new java.io.File(dir)).deleteRecursively()

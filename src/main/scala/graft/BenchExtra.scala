@@ -12,7 +12,7 @@ import graft.pipeline.{ExtractJob, PagesGen}
  * expensive queries' seconds decompose into operator costs instead of one
  * opaque number. Cited in OPTIMIZATION_r08.md.
  *
- * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.BenchExtra [curate|incdedup|all]"
+ * Usage: SPARK_GRAFT_SF_DIR=<testdata>/sf0.1 sbt "runMain graft.BenchExtra"
  */
 object BenchExtra {
   @volatile private var jobCount = 0
@@ -20,7 +20,6 @@ object BenchExtra {
 
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val what = args.headOption.getOrElse("all")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -51,89 +50,8 @@ object BenchExtra {
       spark.sparkContext.setJobDescription(null)
     }
 
-    if (what == "curate" || what == "all") curatePhases(spark, sfDir, noop, timed)
-    if (what == "incdedup" || what == "all") incdedupPhases(spark, timed)
-    if (what == "bloom") bloomProbeSize(spark, noop, timed)
-    if (what == "ingest") ingestLegs(spark, timed)
+    curatePhases(spark, sfDir, noop, timed)
     spark.stop()
-  }
-
-  /** Ingest-amortization legs (VERDICT r7 #5): the frozen Bench ingest
-    * probe commits a 1k batch against an 8k history (fixed commit latency
-    * dominates at that size); these legs commit 1k / 10k / 100k batches
-    * against a 100k-doc history through the SAME durable path
-    * (dedupeAndCommitIndexed — parquet store + bucketed band table) and
-    * report docs/s per leg, so the claimed O(touched-buckets) per-batch
-    * cost is evidenced, not asserted. Same deterministic corpus expression
-    * as the frozen probe. */
-  private def ingestLegs(spark: SparkSession,
-                         timed: String => (=> Unit) => Unit): Unit = {
-    import graft.ops.IncrementalDedup
-    val histN = 100000
-    val dir = java.nio.file.Files.createTempDirectory("graft-benchextra-ingest-")
-      .toAbsolutePath.toString
-    val tbl = "graft_benchextra_ingest_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    def corpus(from: Int, n: Int) = spark.range(from, from + n.toLong)
-      .selectExpr("CAST(id AS STRING) AS doc",
-        "concat('doc body ', CAST(id AS STRING), ' ', " +
-          "repeat(concat('w', CAST(id % 211 AS STRING), ' x', CAST(id % 97 AS STRING), " +
-          "' y', CAST(id % 53 AS STRING), ' '), 10), " +
-          "CASE WHEN id % 50 = 0 THEN 'tail common suffix block' ELSE '' END) AS body")
-    try {
-      timed(s"ingest:history_build_$histN") {
-        IncrementalDedup.dedupeAndCommitIndexed(
-          corpus(0, histN), "doc", "body", dir, tbl).count(): Unit
-      }
-      var base = histN
-      Seq(1000, 10000, 100000).foreach { batchN =>
-        var cnt = 0L
-        val t0 = System.nanoTime()
-        cnt = IncrementalDedup.dedupeAndCommitIndexed(
-          corpus(base, batchN), "doc", "body", dir, tbl).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        System.err.println(
-          f"[benchextra] ingest leg: $cnt%d-doc batch vs ~$base%d history in $sec%.2f s (${cnt / sec}%.1f docs/s)")
-        base += batchN
-      }
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      try {
-        import scala.reflect.io.Directory
-        new Directory(new java.io.File(dir)).deleteRecursively()
-      } catch { case _: Exception => () }
-    }
-  }
-
-  /** Plan-size evidence for the r8 broadcast Bloom probe (VERDICT r7 #6):
-    * forced k=4 over a 4M-url seen set (~9.5 MB sketch per shard, ~38 MB
-    * total). The literal variant embeds all sketches in every task binary
-    * (watch for TaskSetManager "very large size" warnings in the log);
-    * the broadcast variant ships them once per executor. */
-  private def bloomProbeSize(spark: SparkSession, noop: DataFrame => Unit,
-                             timed: String => (=> Unit) => Unit): Unit = {
-    spark.sparkContext.setLogLevel("WARN")
-    val seenN = 4000000L
-    val seen = spark.range(seenN).selectExpr(
-      "concat('https://bloomprobe.example.com/p', id) AS url")
-    val cands = spark.range(200000).selectExpr(
-      // half overlap the seen set, half fresh
-      "concat('https://bloomprobe.example.com/p', CASE WHEN id % 2 = 0 THEN id ELSE id + 100000000 END) AS url")
-      .localCheckpoint(true)
-    val k = graft.pipeline.Frontier.bloomShards(seenN, 0.03).max(4)
-    val perShard = (seenN + k - 1) / k
-    val bits = graft.pipeline.Frontier.optimalNumBits(perShard, 0.03)
-    System.err.println(f"[benchextra] bloom probe: k=$k%d shards, " +
-      f"${bits / 8.0 / 1024 / 1024}%.1f MiB/sketch, " +
-      f"${k * bits / 8.0 / 1024 / 1024}%.1f MiB total literal payload in the r7 form")
-    Seq(true, false).foreach { bcast =>
-      val tag = if (bcast) "broadcast" else "literal"
-      (1 to 2).foreach { rep =>
-        timed(s"bloom:$tag:rep$rep")(noop(graft.pipeline.Frontier.unseenByBloom(
-          cands, seen, "url", expectedSeen = seenN, shards = k,
-          probeViaBroadcast = bcast)))
-      }
-    }
   }
 
   /** Stage decomposition of curation_pages: replicates Curate.ledgerPlan's
@@ -191,57 +109,5 @@ object BenchExtra {
 
     rel.foreach(d => scala.util.Try(d.unpersist()))
     judged.unpersist(); sigs.unpersist(); extracted.unpersist()
-  }
-
-  /** Phase decomposition of incdedup_fixture: the same two committed
-    * batches, each phase timed (openStore / dedupeBatch / band append /
-    * store append). */
-  private def incdedupPhases(spark: SparkSession,
-                             timed: String => (=> Unit) => Unit): Unit = {
-    // two reps, fresh store each: rep 1 is the cold/JIT pass, rep 2 the
-    // warm per-phase attribution (tiny data ⇒ cost = #jobs × dispatch
-    // latency; the shared listener in main counts them per phase).
-    (1 to 2).foreach { rep =>
-      val j0 = jobCount; val s0 = stageCount
-      incdedupOnce(spark, timed, rep)
-      System.err.println(s"[benchextra] rep $rep: ${jobCount - j0} jobs, ${stageCount - s0} stages")
-    }
-  }
-
-  private def incdedupOnce(spark: SparkSession,
-                           timed: String => (=> Unit) => Unit, rep: Int): Unit = {
-    import spark.implicits._
-    import graft.ops.IncrementalDedup
-    val dir = java.nio.file.Files.createTempDirectory("graft-benchextra-")
-      .toAbsolutePath.toString
-    val tbl = s"graft_benchextra_bands_r$rep" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    try {
-      Seq(1, 2).foreach { b =>
-        val batch = (if (b == 1) graft.pipeline.IncDedupFixture.batch1
-                     else graft.pipeline.IncDedupFixture.batch2)
-        val df = spark.createDataset(batch).repartition(2).toDF("doc", "body")
-        var hist: IncrementalDedup.Index = null
-        timed(s"b$b:openStore") { hist = IncrementalDedup.openStore(spark, dir) }
-        val tableExists = spark.catalog.tableExists(tbl)
-        var r: IncrementalDedup.BatchResult = null
-        timed(s"b$b:dedupeBatch") {
-          r = IncrementalDedup.dedupeBatch(
-            df, "doc", "body", hist,
-            histBands = if (tableExists) spark.table(tbl) else null)
-        }
-        val bandSigs = if (tableExists) r.delta.sigs
-                       else hist.sigs.unionByName(r.delta.sigs)
-        timed(s"b$b:appendBandsToTable")(
-          IncrementalDedup.appendBandsToTable(bandSigs, tbl, 4))
-        timed(s"b$b:appendToStore")(IncrementalDedup.appendToStore(dir, r.delta))
-      }
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      try {
-        import scala.reflect.io.Directory
-        new Directory(new java.io.File(dir)).deleteRecursively()
-      } catch { case _: Exception => () }
-    }
   }
 }

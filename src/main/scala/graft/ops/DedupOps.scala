@@ -107,10 +107,12 @@ object DedupOps {
     * threshold comparison. */
   def suppressMegaBuckets(bands: DataFrame, bucketCols: Seq[String],
                           maxBucket: Int): DataFrame = {
-    // Int.MaxValue disables suppression by contract (every count passes the
-    // filter) — skip the count aggregate + self-join entirely instead of
-    // paying two exchanges for an identity transform (the embedding-LSH
-    // chain always runs with suppression off; r8, guide §2.4)
+    // Int.MaxValue disables suppression: skip the count aggregate +
+    // self-join entirely instead of paying two exchanges for an identity
+    // transform (the embedding-LSH chain always runs with suppression off).
+    // This is not quite the filter it replaces: `count <= Int.MaxValue`
+    // dropped a bucket of more than 2^31 rows (the long count exceeds the
+    // int bound), while the early return passes such a bucket through.
     if (maxBucket == Int.MaxValue) return bands
     val keyCols = bucketCols.map(col)
     val smallKeys = bands.groupBy(keyCols: _*).count()

@@ -22,30 +22,19 @@ import org.apache.spark.sql.functions._
  * history, AQE broadcasts the batch keys and history bands never shuffle
  * at all. Buckets larger than `maxBucket` on EITHER side are suppressed
  * via the ONE shared [[DedupOps.suppressMegaBuckets]] rule) →
- * near-in-batch (banded self-join → verify → CC survivors). The
- * per-batch history cost that remained — recomputing bands from `sigs`
- * (a narrow map over all history) and, for batches too large to
- * broadcast, one history-band shuffle into the join — is eliminated by
- * the PERSISTED BAND STORE ([[appendBandsToTable]] /
- * [[dedupeAndCommitIndexed]]): the band relation lives as a third store
- * table bucketed on the full join key (band_idx, band_key) — the
- * [[AnnIndex]] layout — so batch N+1 scans it pre-partitioned for the
- * band join: the history side arrives exchange-free, and only the batch
- * side shuffles (or broadcasts) into the bucket layout. Appends reuse the table's own
- * bucket spec, so commit stays O(batch).
+ * near-in-batch (banded self-join → verify → CC survivors).
  *
  * [[dedupeBatch]] returns the batch ledger plus the index DELTA — the
  * accepted documents' index rows ONLY, materialized at O(batch) cost.
  * History is never copied: an in-session caller extends its index with
  * [[extended]] (a lazy union of materialized leaves — plan metadata, not
- * data movement), and a production ingest loop uses the parquet-backed
- * store ([[openStore]] / [[appendToStore]] / [[dedupeAndCommit]]): each
- * batch APPENDS files, so the store survives executor loss and session
- * restarts, batch N+1 plans against plain file-scan leaves, and commit
- * cost stays O(batch) forever. (The two appends of one batch are not
- * atomic together — a single-writer loop that can crash mid-commit
- * should stage them, e.g. write both under a batch=N temp dir and
- * rename; the read path tolerates a missing store but not a half one.)
+ * data movement), and an ingest loop commits through the ONE durable
+ * store ([[openStore]] / [[dedupeAndCommit]]): parquet partitioned by
+ * batch id, `dir/{sigs,hashes}/ingest_batch=<id>/`. A commit writes only
+ * its own batch's partitions and overwrites them, so the store survives
+ * executor loss and session restarts, batch N+1 plans against plain
+ * file-scan leaves, commit cost stays O(batch), and a retried or torn
+ * commit of the same batch id converges to the state of one clean run.
  */
 object IncrementalDedup {
 
@@ -68,8 +57,9 @@ object IncrementalDedup {
   def extended(index: Index, delta: Index): Index =
     Index(index.hashes.union(delta.hashes), index.sigs.union(delta.sigs))
 
-  /** Open the parquet-backed history store; an absent store is an empty
-    * index (first batch bootstraps it). */
+  /** Open the parquet-backed history store; both frames carry the
+    * `ingest_batch` partition column. An absent store is an empty index
+    * (first batch bootstraps it). */
   def openStore(spark: SparkSession, dir: String): Index = {
     val p = new org.apache.hadoop.fs.Path(dir, "hashes")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -79,122 +69,28 @@ object IncrementalDedup {
       spark.read.parquet(s"$dir/sigs"))
   }
 
-  /** Append one batch's accepted rows to the store — files are added,
-    * history is never rewritten (`sigs` first so a torn commit leaves at
-    * worst near-dup rows without their exact-hash twin, not the reverse). */
-  def appendToStore(dir: String, delta: Index): Unit = {
-    delta.sigs.write.mode("append").parquet(s"$dir/sigs")
-    delta.hashes.write.mode("append").parquet(s"$dir/hashes")
-  }
-
-  /** Ingest-loop step: dedup `batch` against the store at `dir`, append
-    * the accepted delta, return the ledger. */
+  /** Ingest-loop step, exactly once per batch id: dedup `batch` against
+    * every OTHER batch in the store at `dir`, then overwrite this batch's
+    * own partitions with the accepted delta and return the ledger. A
+    * replay is idempotent by construction: it (a) opens the history
+    * EXCLUDING its own partition, so a torn previous attempt can never
+    * dedup the batch against itself, and (b) OVERWRITES only its own
+    * partition, so final state is identical however many times the batch
+    * id runs — which is what Structured Streaming's at-least-once
+    * `foreachBatch` needs. `sigs` is written before `hashes`: a crash
+    * between the two leaves at worst near-dup rows without their
+    * exact-hash twin, which the retry overwrites. The MinHash parameters
+    * are [[dedupeBatch]]'s defaults, fixed here because a store's
+    * signatures are only comparable under the values that wrote them. */
   def dedupeAndCommit(batch: DataFrame, idCol: String, textCol: String,
-                      dir: String,
-                      shingleN: Int = 3, minhashK: Int = 64, bandSize: Int = 4,
-                      jaccardThreshold: Double = 0.8, estFloor: Double = 0.55,
-                      maxBucket: Int = 64): DataFrame = {
-    val r = dedupeBatch(batch, idCol, textCol,
-      openStore(batch.sparkSession, dir),
-      shingleN, minhashK, bandSize, jaccardThreshold, estFloor, maxBucket)
-    appendToStore(dir, r.delta)
-    r.ledger
-  }
-
-  /** Append one batch's accepted band rows `(id, band_idx, band_key)` to
-    * the bucketed band store table, creating it on first use. The table is
-    * BUCKETED on the FULL band-join key (band_idx, band_key) — the
-    * [[AnnIndex]] layout generalized to a composite key: scans report
-    * `HashPartitioning(band_idx, band_key, numBuckets)`, which exactly
-    * matches the band join's clustering (Spark's default
-    * `requireAllClusterKeysForCoPartition` rejects subset-key
-    * co-partitioning), so history bands reach the join without an
-    * Exchange. Appends mirror the table's OWN catalog bucket spec — a
-    * mismatched hand-passed count would silently split buckets across
-    * incompatible layouts. */
-  def appendBandsToTable(deltaSigs: DataFrame, tableName: String,
-                         bandSize: Int, numBuckets: Int = 16): Unit = {
-    val spark = deltaSigs.sparkSession
-    val bands = DedupOps.explodeBands(deltaSigs, bandSize)
-    if (!spark.catalog.tableExists(tableName)) {
-      bands.write.bucketBy(numBuckets, "band_idx", "band_key")
-        .sortBy("band_idx", "band_key")
-        .saveAsTable(tableName)
-    } else {
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(tableName))
-      val spec = meta.bucketSpec.getOrElse(throw new IllegalStateException(
-        s"$tableName has no bucket spec — not a band store table"))
-      val w = bands.write.mode("append")
-        .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
-          spec.bucketColumnNames.tail: _*)
-      spec.sortColumnNames.headOption
-        .fold(w)(sc => w.sortBy(sc, spec.sortColumnNames.tail: _*))
-        .saveAsTable(tableName)
-    }
-  }
-
-  /** Ingest-loop step with the persisted band store: dedup `batch` against
-    * the parquet store at `dir` using the BUCKETED band table as the
-    * history band relation (no per-batch band recompute from history
-    * `sigs`, no history-side shuffle into the band join), then append the
-    * accepted delta to both. The first batch bootstraps the table — from
-    * the FULL store history plus the delta, so a store dir populated
-    * before the band table existed (e.g. via [[dedupeAndCommit]]) seeds a
-    * complete table rather than one whose older history is invisible to
-    * every later band join.
-    *
-    * The two appends are still not one atomic commit, but their ORDER is
-    * load-bearing: bands are written FIRST. A crash between them leaves
-    * orphan band rows (harmless — the verify join drops pairs with no
-    * `sigs` row, and the retried batch's re-append only adds duplicates
-    * that `dropDuplicates(id_a, id_b)` absorbs), never store documents
-    * with missing bands, which would silently accept their near-
-    * duplicates forever. */
-  def dedupeAndCommitIndexed(batch: DataFrame, idCol: String, textCol: String,
-                             dir: String, bandTable: String,
-                             shingleN: Int = 3, minhashK: Int = 64, bandSize: Int = 4,
-                             jaccardThreshold: Double = 0.8, estFloor: Double = 0.55,
-                             maxBucket: Int = 64, numBuckets: Int = 16): DataFrame = {
-    val spark = batch.sparkSession
-    val tableExists = spark.catalog.tableExists(bandTable)
-    val hist = openStore(spark, dir)
-    val r = dedupeBatch(batch, idCol, textCol, hist,
-      shingleN, minhashK, bandSize, jaccardThreshold, estFloor, maxBucket,
-      histBands = if (tableExists) spark.table(bandTable) else null)
-    val bandSigs =
-      if (tableExists) r.delta.sigs
-      else hist.sigs.unionByName(r.delta.sigs)
-    appendBandsToTable(bandSigs, bandTable, bandSize, numBuckets)
-    appendToStore(dir, r.delta)
-    r.ledger
-  }
-
-  /** Exactly-once micro-batch commit for Structured Streaming's
-    * `foreachBatch` (which is AT-LEAST-once: a failed trigger replays the
-    * same batchId). The store layout is batch-partitioned —
-    * `dir/{hashes,sigs}/ingest_batch=<batchId>/` — and a replay is
-    * idempotent by construction: it (a) opens the history EXCLUDING its
-    * own partition, so a torn previous attempt can never dedup the batch
-    * against itself, and (b) OVERWRITES only its own partition, so final
-    * state is identical however many times the batchId runs. `sigs` is
-    * written before `hashes` (the [[appendToStore]] ordering rationale).
-    * Do NOT mix this layout with [[appendToStore]]'s flat files in one
-    * store dir — partition discovery rejects the mixture. */
-  def dedupeAndCommitIdempotent(batch: DataFrame, idCol: String, textCol: String,
-                                dir: String, batchId: Long,
-                                shingleN: Int = 3, minhashK: Int = 64, bandSize: Int = 4,
-                                jaccardThreshold: Double = 0.8, estFloor: Double = 0.55,
-                                maxBucket: Int = 64): DataFrame = {
-    val spark = batch.sparkSession
-    val opened = openStore(spark, dir)
+                      dir: String, batchId: Long): DataFrame = {
+    val opened = openStore(batch.sparkSession, dir)
     def ownPartitionExcluded(df: DataFrame): DataFrame =
       if (df.columns.contains("ingest_batch"))
         df.filter(col("ingest_batch") =!= batchId).drop("ingest_batch")
       else df
     val hist = Index(ownPartitionExcluded(opened.hashes), ownPartitionExcluded(opened.sigs))
-    val r = dedupeBatch(batch, idCol, textCol, hist,
-      shingleN, minhashK, bandSize, jaccardThreshold, estFloor, maxBucket)
+    val r = dedupeBatch(batch, idCol, textCol, hist)
     r.delta.sigs.write.mode("overwrite").parquet(s"$dir/sigs/ingest_batch=$batchId")
     r.delta.hashes.write.mode("overwrite").parquet(s"$dir/hashes/ingest_batch=$batchId")
     r.ledger
@@ -210,8 +106,7 @@ object IncrementalDedup {
                   index: Index,
                   shingleN: Int = 3, minhashK: Int = 64, bandSize: Int = 4,
                   jaccardThreshold: Double = 0.8, estFloor: Double = 0.55,
-                  maxBucket: Int = 64,
-                  histBands: DataFrame = null): BatchResult = {
+                  maxBucket: Int = 64): BatchResult = {
 
     val spark = batch.sparkSession
     import spark.implicits._
@@ -221,13 +116,13 @@ object IncrementalDedup {
       .persist()
 
     // Bootstrap short-circuit (r8): when the history index is the literal
-    // empty LocalRelation (fresh store — openStore found nothing) and no
-    // band table exists, every history join is an identity/empty transform
+    // empty LocalRelation (fresh store — openStore found nothing), every
+    // history join is an identity/empty transform
     // — but each still costs AQE jobs (broadcast builds + shuffle stages;
     // measured ~20 of the first batch's 74 jobs at fixture scale). A
     // plan-level check (no data scanned) skips them; output is identical
     // because joining an empty relation yields nothing.
-    val emptyHist = histBands == null && Seq(index.hashes, index.sigs).forall {
+    val emptyHist = Seq(index.hashes, index.sigs).forall {
       df => df.queryExecution.optimizedPlan match {
         // optimizedPlan: ConvertToLocalRelation collapses the toDF Project
         // so an emptyIndex frame IS a LocalRelation here
@@ -282,22 +177,16 @@ object IncrementalDedup {
       .persist() // two consumers: the touched-key semi-join and the join itself
     toUnpersist += cappedBatch
     // left_semi: restricts WITHOUT multiplying and dedupes its build side
-    // internally — no separate distinct() shuffle. With a persisted band
-    // store (histBands != null) the history side is a bucketed-table scan
-    // already partitioned on band_key — no recompute from sigs, no
-    // history-side exchange; otherwise bands are recomputed narrowly.
-    val histBandRel =
-      if (histBands != null) histBands
-      else DedupOps.explodeBands(index.sigs, bandSize)
+    // internally — no separate distinct() shuffle. Bands are recomputed
+    // from history `sigs` by a narrow map.
     // dropDuplicates AFTER the batch-touched restriction (so the dedupe is
-    // O(touched), not O(history)): a crash-retried commit re-appends its
-    // band rows to the persisted table, and duplicate rows would INFLATE
+    // O(touched), not O(history)): a history may hold one id's sigs row
+    // more than once (the same id accepted by two batches, or a caller-built
+    // index with repeated rows), and duplicate band rows would INFLATE
     // suppressMegaBuckets' counts — a bucket of 40 real members + 40
-    // duplicates reads as 80 > maxBucket and is suppressed forever, which
-    // is exactly the silent near-dup miss the bands-first commit order
-    // exists to prevent. The table's (band_idx, band_key) bucketing
-    // satisfies the aggregation's clustering (subset key), so no exchange.
-    val histTouched = histBandRel
+    // duplicates reads as 80 > maxBucket and is suppressed, a silent
+    // near-dup miss. Bucket sizes count distinct members.
+    val histTouched = DedupOps.explodeBands(index.sigs, bandSize)
       .join(cappedBatch.select("band_idx", "band_key"), bucketKey, "left_semi")
       .dropDuplicates("id", "band_idx", "band_key")
     val histPairs = cappedBatch

@@ -112,9 +112,10 @@ object Frontier {
       .select("url", "host", "lastmod", "priority")
   }
 
-  /** One filter may hold at most 2^31 bits (256 MiB): the sketch is a
-    * DRIVER-side literal broadcast into the probe filter, so its size must
-    * stay bounded no matter what `expectedSeen` a caller passes. 2^31 bits
+  /** One filter may hold at most 2^31 bits (256 MiB): the sketch is built
+    * on the driver and shipped to every executor as a broadcast variable,
+    * so its size must stay bounded no matter what `expectedSeen` a caller
+    * passes. 2^31 bits
     * covers ~3×10^8 items at 3% fpp; past that, [[unseenByBloom]] SHARDS
     * the seen-set by `pmod(xxhash64(url), k)` into k independently-sized
     * filters — the sharding is automatic from `expectedSeen`, so the fpp
@@ -142,10 +143,9 @@ object Frontier {
 
   /** Ceiling on how many sharded sketches are built at once. All k live in
     * driver heap during the build and (since r8) ship to each EXECUTOR
-    * once as a broadcast variable — no longer in every serialized task
-    * binary, which is where the r7 literal-probe design paid k × 256 MiB
-    * per task. The 8 × 256 MiB = 2 GiB ceiling is now purely the
-    * driver/executor MEMORY budget for resident sketches (covering
+    * once as a broadcast variable, never inside a serialized task
+    * binary. The 8 × 256 MiB = 2 GiB ceiling is the driver/executor
+    * MEMORY budget for resident sketches (covering
     * ~2.4×10^9 seen URLs at 3% fpp); past it a 10^12-URL seen-set would
     * need ~3.4k sketches ≈ 870 GB resident, so [[unseenByBloom]] falls
     * back to the exact anti-join — the bucketed-seen-set scale path
@@ -183,21 +183,19 @@ object Frontier {
     * `pmod(xxhash64(url), k)` ([[bloomShards]]): k filters built in ONE
     * grouped pass over the seen-set (each group's aggregate is still
     * map-side combinable), candidates probe only their own shard's filter
-    * via a CASE chain of foldable sketch literals — one probe per row, and
-    * per-shard sizing keeps the requested fpp up to
-    * [[MaxBloomShards]]-worth of cardinality. Past THAT (k >
-    * [[MaxBloomShards]], ~2.4×10^9 items at 3% fpp) the literal-sketch
-    * design itself stops scaling — see [[MaxBloomShards]] — and this
-    * method RETURNS THE PLAIN EXACT ANTI-JOIN (same output, no
-    * prefilter) instead of building an infeasible plan. */
+    * — one probe per row, and per-shard sizing keeps the requested fpp up
+    * to [[MaxBloomShards]]-worth of cardinality. Past THAT (k >
+    * [[MaxBloomShards]], ~2.4×10^9 items at 3% fpp) resident sketches
+    * stop scaling — see [[MaxBloomShards]] — and this method RETURNS THE
+    * PLAIN EXACT ANTI-JOIN (same output, no prefilter) instead of
+    * building an infeasible plan. */
   def unseenByBloom(
       candidates: DataFrame,
       seen: DataFrame,
       urlCol: String = "url",
       expectedSeen: Long = 1L << 20,
       fpp: Double = 0.03,
-      shards: Int = 0,
-      probeViaBroadcast: Boolean = true): DataFrame = {
+      shards: Int = 0): DataFrame = {
     val spark = candidates.sparkSession
     graft.plans.GraftExtensions.registerNative(spark)
     val k = if (shards > 0) shards else bloomShards(expectedSeen, fpp)
@@ -245,48 +243,24 @@ object Frontier {
         case (key, None)    => spark.conf.unset(key)
       }
     if (filters.isEmpty) return candidates // empty seen set: all unseen
-    // Probe via a BROADCAST VARIABLE (r8, VERDICT r7 #6): the r7 form
-    // embedded every sketch as a foldable plan literal, so all k × up to
-    // 256 MiB rode the serialized task binary of EVERY task of both
-    // consumer branches. The broadcast ships each sketch to an executor
+    // Probe via a BROADCAST VARIABLE: each sketch ships to an executor
     // ONCE (torrent blocks, deserialized BloomFilter objects cached by the
-    // block manager) and the typed probe reads the row's own shard —
-    // identical output (same sketch bytes, same xxhash64 input, same
-    // mightContainLong bit test; null urls hash to null and drop from both
-    // branches exactly as the literal expression did). The literal path is
-    // kept under `probeViaBroadcast = false` as the A/B evidence harness
-    // (FrontierBloomSpec pins output equality of the two forms).
-    val mightContain =
-      if (probeViaBroadcast) {
-        val bf = filters.map { case (s, bytes) =>
-          s -> org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(bytes))
-        }
-        val bc = spark.sparkContext.broadcast(bf)
-        val kL = k.toLong
-        val probe = udf { (h: java.lang.Long) =>
-          if (h == null) null.asInstanceOf[java.lang.Boolean]
-          else {
-            val f = bc.value.getOrElse(((h % kL) + kL) % kL, null)
-            java.lang.Boolean.valueOf(f != null && f.mightContainLong(h))
-          }
-        }.withName("bloom_shard_probe") // identifiable in plan audits
-        probe(xxhash64(col(urlCol)))
-      } else if (k == 1)
-        call_function("bloom_might_contain",
-          lit(filters(0L)), xxhash64(col(urlCol)))
-      else {
-        // CASE over the row's own shard: exactly one sketch probe per row,
-        // each bloom_might_contain's filter argument a foldable literal
-        val shardOf = pmod(xxhash64(col(urlCol)), lit(k.toLong))
-        filters.toSeq.sortBy(_._1).foldLeft(lit(false)) {
-          case (acc, (s, bytes)) =>
-            when(shardOf === lit(s),
-              call_function("bloom_might_contain",
-                lit(bytes), xxhash64(col(urlCol))))
-              .otherwise(acc)
-        }
-      }
+    // block manager) and the typed probe reads the row's own shard. A null
+    // url still gets a hash — `xxhash64(NULL)` is the seed, 42 — so it is
+    // probed like any other row; it never equals a seen url, so it lands
+    // in the output on either branch, as in the exact anti-join
+    // (FrontierBloomSpec pins this with null-url candidates and seen rows).
+    val bf = filters.map { case (s, bytes) =>
+      s -> org.apache.spark.util.sketch.BloomFilter.readFrom(
+        new java.io.ByteArrayInputStream(bytes))
+    }
+    val bc = spark.sparkContext.broadcast(bf)
+    val kL = k.toLong
+    val probe = udf { (h: Long) =>
+      val f = bc.value.getOrElse(((h % kL) + kL) % kL, null)
+      f != null && f.mightContainLong(h)
+    }.withName("bloom_shard_probe") // identifiable in plan audits
+    val mightContain = probe(xxhash64(col(urlCol)))
     val definitelyUnseen = candidates.filter(!mightContain)
     val verified = candidates.filter(mightContain)
       .join(seen.select(col(urlCol).as("__seen_url")),

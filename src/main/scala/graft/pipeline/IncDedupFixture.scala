@@ -71,34 +71,27 @@ object IncDedupFixture {
     (2, "x5", false, "exact_dup_batch", "x3"),
     (2, "x6", true, "", ""))
 
-  /** Drives the DURABLE path end-to-end: each batch commits through the
-    * parquet-backed history store AND the bucketed band-store table
-    * (fresh temp dir / table per call, so repeated bench reps never dedup
-    * against a previous run's history), and batch 2 reopens both from
-    * disk — the oracle therefore gates openStore/appendToStore round-
-    * tripping plus the exchange-free band-store join path, not just the
-    * in-memory plan. */
+  /** Drives the DURABLE path end-to-end: batches 1 and 2 commit as store
+    * batch ids 0 and 1 through [[IncrementalDedup.dedupeAndCommit]]
+    * (fresh temp dir per call, so repeated bench reps never dedup against
+    * a previous run's history), and batch 2 reopens batch 1's partitions
+    * from disk — the oracle therefore gates the store's write/reopen
+    * round trip, not just the in-memory plan. */
   def fixtureDf(s: SparkSession): DataFrame = {
     import org.apache.spark.sql.functions._
     import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-incdedup-")
       .toAbsolutePath.toString
-    val bandTable = "graft_incdedup_bands_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    try {
-      val led1 = IncrementalDedup.dedupeAndCommitIndexed(
-        s.createDataset(batch1).repartition(2).toDF("doc", "body"),
-        "doc", "body", dir, bandTable)
-      val led2 = IncrementalDedup.dedupeAndCommitIndexed(
-        s.createDataset(batch2).repartition(2).toDF("doc", "body"),
-        "doc", "body", dir, bandTable)
-      // ledgers are materialized leaves (localCheckpoint inside dedupeBatch),
-      // so the band table can drop before the caller consumes the union
-      led1.withColumn("batch", lit(1))
-        .union(led2.withColumn("batch", lit(2)))
-        .select("batch", "id", "kept", "stage", "reason")
-        .orderBy("batch", "id")
-    } finally s.sql(s"DROP TABLE IF EXISTS $bandTable")
+    val led1 = IncrementalDedup.dedupeAndCommit(
+      s.createDataset(batch1).repartition(2).toDF("doc", "body"),
+      "doc", "body", dir, 0L)
+    val led2 = IncrementalDedup.dedupeAndCommit(
+      s.createDataset(batch2).repartition(2).toDF("doc", "body"),
+      "doc", "body", dir, 1L)
+    led1.withColumn("batch", lit(1))
+      .union(led2.withColumn("batch", lit(2)))
+      .select("batch", "id", "kept", "stage", "reason")
+      .orderBy("batch", "id")
   }
 
   def fixtureOracle: String = {

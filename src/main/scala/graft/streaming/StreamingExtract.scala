@@ -65,7 +65,7 @@ object StreamingExtract {
 
   /** Continuous ingest with DURABLE cross-batch dedup: a `foreachBatch`
     * sink function running each extracted micro-batch through
-    * [[graft.ops.IncrementalDedup.dedupeAndCommitIdempotent]]. The parquet
+    * [[graft.ops.IncrementalDedup.dedupeAndCommit]]. The parquet
     * history store — NOT Spark's state store — is the dedup state: it
     * outlives the query, its checkpoint, and the session, is shared with
     * batch ingest loops over the same store, and is never bounded by a
@@ -95,7 +95,7 @@ object StreamingExtract {
     val dedupable = rows
       .filter(col("status") === "ok" && length(col("normalized_text")) > 0)
       .select("url", "normalized_text")
-    val ledger = graft.ops.IncrementalDedup.dedupeAndCommitIdempotent(
+    val ledger = graft.ops.IncrementalDedup.dedupeAndCommit(
       dedupable, "url", "normalized_text", storeDir, batchId)
     val passthrough = rows
       .filter(col("status") =!= "ok" || length(col("normalized_text")) === 0)

@@ -7,8 +7,9 @@ import org.scalatest.BeforeAndAfterAll
 /** Incremental-dedup operator properties beyond the fixture oracle: the
   * delta contains exactly the accepted docs, later batches dedup against
   * accumulated survivors, the parquet store round-trips across reopens,
-  * empty-shingle (no-content) docs never near-dup each other, and the
-  * history band join suppresses mega-buckets instead of fanning out. */
+  * empty-shingle (no-content) docs never near-dup each other, the
+  * history band join suppresses mega-buckets instead of fanning out, and a
+  * torn or replayed commit of one batch id ends in a clean run's state. */
 class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -78,18 +79,19 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark; import s.implicits._
     val dir = tempDir()
     val led1 = IncrementalDedup.dedupeAndCommit(
-      Seq(("a", "alpha beta gamma delta")).toDF("doc", "body"), "doc", "body", dir)
+      Seq(("a", "alpha beta gamma delta")).toDF("doc", "body"), "doc", "body", dir, 0L)
     assert(led1.filter("kept").count() == 1)
-    // a new read of the store (fresh frames, file-scan leaves) sees batch 1
+    // a new read of the store (fresh frames, file-scan leaves) sees batch 0
     val led2 = IncrementalDedup.dedupeAndCommit(
       Seq(("b", "alpha beta gamma delta"), ("c", "nu xi omicron pi"))
-        .toDF("doc", "body"), "doc", "body", dir)
+        .toDF("doc", "body"), "doc", "body", dir, 1L)
     val rows = led2.collect()
       .map(r => r.getString(0) -> ((r.getString(2), r.getString(3)))).toMap
     assert(rows("b") == (("exact_dup_hist", "a")))
     assert(rows("c") == (("", "")))
     val idx = IncrementalDedup.openStore(spark, dir)
-    assert(idx.hashes.select("id").as[String].collect().toSet == Set("a", "c"))
+    assert(idx.hashes.select("id", "ingest_batch").as[(String, Int)].collect().toSet ==
+      Set(("a", 0), ("c", 1)))
     assert(idx.sigs.count() == 2)
   }
 
@@ -101,11 +103,11 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     // jaccard(∅,∅)=1 falsely drops them
     val led1 = IncrementalDedup.dedupeAndCommit(
       Seq(("p", "!!!"), ("q", "???"), ("r", "genuine words with content here"))
-        .toDF("doc", "body"), "doc", "body", dir)
+        .toDF("doc", "body"), "doc", "body", dir, 0L)
     assert(led1.filter("kept").count() == 3)
     // and vs history: another no-content doc must not near-dup p or q
     val led2 = IncrementalDedup.dedupeAndCommit(
-      Seq(("t", ",,,")).toDF("doc", "body"), "doc", "body", dir)
+      Seq(("t", ",,,")).toDF("doc", "body"), "doc", "body", dir, 1L)
     assert(led2.filter("kept").count() == 1)
   }
 
@@ -129,34 +131,6 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!row.getBoolean(1) && row.getString(2) == "near_dup_hist")
   }
 
-  test("band-store path: dedupeAndCommitIndexed matches the plain commit path") {
-    val s = spark; import s.implicits._
-    val dir = tempDir()
-    val tbl = "graft_spec_bands_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    try {
-      val led1 = IncrementalDedup.dedupeAndCommitIndexed(
-        s.createDataset(graft.pipeline.IncDedupFixture.batch1)
-          .repartition(2).toDF("doc", "body"), "doc", "body", dir, tbl)
-      val led2 = IncrementalDedup.dedupeAndCommitIndexed(
-        s.createDataset(graft.pipeline.IncDedupFixture.batch2)
-          .repartition(2).toDF("doc", "body"), "doc", "body", dir, tbl)
-      val got = (led1.withColumn("batch", org.apache.spark.sql.functions.lit(1))
-        .union(led2.withColumn("batch", org.apache.spark.sql.functions.lit(2))))
-        .select("batch", "id", "kept", "stage", "reason")
-        .as[(Int, String, Boolean, String, String)].collect().sortBy(t => (t._1, t._2)).toSeq
-      assert(got == graft.pipeline.IncDedupFixture.expectedRows)
-      // the band table accumulated exactly the accepted docs' bands
-      val ids = spark.table(tbl).select("id").distinct().as[String].collect().toSet
-      assert(ids == Set("h1", "h2", "x3", "x6"))
-      // and the table is really bucketed (the exchange-free contract)
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-      assert(meta.bucketSpec.exists(
-        _.bucketColumnNames == Seq("band_idx", "band_key")))
-    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
-  }
-
   test("duplicate history band rows (crash-retried append) must not inflate " +
        "bucket counts past the suppression cap") {
     val s = spark; import s.implicits._
@@ -166,19 +140,19 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     // real history sigs for the true near-dup + the batch doc's own bucket
     val hdSigs = DedupOps.minhashSignatures(
       Seq("hd" -> bodyH2).toDF("doc", "body"), "doc", "body", 3, 64)
-    val b1Band = DedupOps.explodeBands(
-        DedupOps.minhashSignatures(batch, "doc", "body", 3, 64), 4)
-      .select("band_idx", "band_key").head()
-    // one bucket: hd + 39 fillers = 40 distinct members (under the 64 cap),
-    // every row DUPLICATED — the torn-retry shape. Counting raw rows reads
-    // 80 > 64 and suppresses the bucket; counting distinct members must not.
-    val bucket = (Seq("hd") ++ (1 to 39).map(i => s"f$i"))
-      .map(id => (id, b1Band.getInt(0), b1Band.getLong(1)))
-    val histBands = (bucket ++ bucket).toDF("id", "band_idx", "band_key")
+      .as[(String, Array[Long], Array[Long])].head()
+    // every bucket hd is in holds hd + 39 fillers = 40 distinct members
+    // (under the 64 cap): the fillers share hd's signature, so they share
+    // its band buckets, but one private shingle each keeps them from
+    // verifying as near-dups of b1. Every sigs row is DUPLICATED, so every
+    // band row is too. Counting raw rows reads 80 > 64 and suppresses the
+    // buckets; counting distinct members must not.
+    val members = (hdSigs._1, hdSigs._2, hdSigs._3) +:
+      (1 to 39).map(i => (s"f$i", Array(i.toLong), hdSigs._3))
     val hist = IncrementalDedup.Index(
-      Seq.empty[(String, String)].toDF("hash", "id"), hdSigs)
-    val r = IncrementalDedup.dedupeBatch(batch, "doc", "body", hist,
-      histBands = histBands)
+      Seq.empty[(String, String)].toDF("hash", "id"),
+      (members ++ members).toDF("id", "sh", "sig"))
+    val r = IncrementalDedup.dedupeBatch(batch, "doc", "body", hist)
     val row = r.ledger.collect().head
     assert(!row.getAs[Boolean]("kept") &&
       row.getAs[String]("stage") == "near_dup_hist" &&
@@ -186,33 +160,34 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"duplicated band rows suppressed a legitimate 40-member bucket: $row")
   }
 
-  test("indexed path bootstraps the band table from a PRE-EXISTING store's " +
-       "FULL history, not just the first delta") {
+  test("torn and replayed commits of one batch id converge to a clean run") {
     val s = spark; import s.implicits._
-    val dir = tempDir()
-    val tbl = "graft_spec_boot_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    try {
-      // history populated BEFORE the band table exists (plain commit path)
+    import graft.pipeline.IncDedupFixture.{batch1, batch2}
+    def commit(dir: String, docs: Seq[(String, String)], id: Long) =
       IncrementalDedup.dedupeAndCommit(
-        s.createDataset(graft.pipeline.IncDedupFixture.batch1)
-          .toDF("doc", "body"), "doc", "body", dir)
-      // first indexed batch: unrelated doc — creates the table. A delta-only
-      // bootstrap would leave h1/h2 invisible to every later band join.
-      val unrelated = Seq(graft.pipeline.IncDedupFixture.batch2(5)) // x6
-      IncrementalDedup.dedupeAndCommitIndexed(
-        unrelated.toDF("doc", "body"), "doc", "body", dir, tbl)
-      val ids = spark.table(tbl).select("id").distinct().as[String].collect().toSet
-      assert(Set("h1", "h2", "x6").subsetOf(ids), s"bootstrap missing history: $ids")
-      // second indexed batch: a NEAR-dup of pre-table history doc h2 — it
-      // must still be caught through the table-backed band join
-      val nearH2 = Seq("z2" -> graft.pipeline.IncDedupFixture.batch2(1)._2)
-      val led = IncrementalDedup.dedupeAndCommitIndexed(
-        nearH2.toDF("doc", "body"), "doc", "body", dir, tbl)
-      val row = led.collect().head
-      assert(!row.getAs[Boolean]("kept") &&
-        row.getAs[String]("stage") == "near_dup_hist" &&
-        row.getAs[String]("reason") == "h2")
-    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
+        s.createDataset(docs).repartition(2).toDF("doc", "body"),
+        "doc", "body", dir, id).collect().map(_.toString).sorted.toSeq
+    def store(dir: String) = {
+      val idx = IncrementalDedup.openStore(spark, dir)
+      (idx.hashes.collect().map(_.toString).sorted.toSeq,
+        idx.sigs.collect().map(_.toString).sorted.toSeq)
+    }
+    val clean = tempDir()
+    val cleanLedgers = Seq(commit(clean, batch1, 0L), commit(clean, batch2, 1L))
+
+    val dir = tempDir()
+    assert(commit(dir, batch1, 0L) == cleanLedgers.head)
+    // a torn attempt of batch 1: only its sigs partition landed, and with
+    // rows that are not batch 1's delta (copies of x3's and x6's bodies
+    // under foreign ids). Were the batch deduped against its own partition,
+    // x3 and x6 would drop as near_dup_hist of these rows.
+    DedupOps.minhashSignatures(
+        Seq("torn3" -> batch2(2)._2, "torn6" -> batch2(5)._2).toDF("doc", "body"),
+        "doc", "body", 3, 64)
+      .write.parquet(s"$dir/sigs/ingest_batch=1")
+    assert(commit(dir, batch2, 1L) == cleanLedgers(1), "retry after a torn attempt")
+    assert(store(dir) == store(clean), "retry after a torn attempt")
+    assert(commit(dir, batch2, 1L) == cleanLedgers(1), "replay of a committed batch")
+    assert(store(dir) == store(clean), "replay of a committed batch")
   }
 }

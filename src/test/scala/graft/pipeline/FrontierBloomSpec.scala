@@ -197,26 +197,24 @@ class FrontierBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Frontier.rawNumBits(perShardAtKminus1, 0.03) > Frontier.MaxBloomBits)
   }
 
-  test("broadcast probe == literal probe == exact path (r8 A/B, forced k=4)") {
-    // the r8 broadcast-variable probe must be bit-identical to the r7
-    // plan-literal CASE probe and to the exact anti-join — same sketches,
-    // same xxhash64 input, same mightContainLong test
+  test("broadcast probe == exact path with null urls (k=4 and k=1)") {
+    // null urls on both sides: xxhash64(NULL) is the seed 42, not null, so
+    // a null candidate is probed like any other row. It never equals a
+    // seen url (not even a null one), so both paths must keep it.
     val s = spark; import s.implicits._
     graft.plans.GraftExtensions.registerNative(spark)
-    val cands = urls("bcast", 80)
-    val seen = (0 until 30).map(i => s"https://bcast.example.com/p$i")
-      .++((0 until 12).map(i => s"https://elsewhere.example.com/s$i")).toDF("url")
-    val exact = cands.join(seen.select(col("url").as("u")),
-        col("url") === col("u"), "left_anti")
-      .select("url").collect().map(_.getString(0)).sorted.toSeq
-    val viaBroadcast = Frontier.unseenByBloom(cands, seen, "url",
-        expectedSeen = 42, shards = 4, probeViaBroadcast = true)
-      .select("url").collect().map(_.getString(0)).sorted.toSeq
-    val viaLiterals = Frontier.unseenByBloom(cands, seen, "url",
-        expectedSeen = 42, shards = 4, probeViaBroadcast = false)
-      .select("url").collect().map(_.getString(0)).sorted.toSeq
-    assert(viaBroadcast == exact)
-    assert(viaLiterals == exact)
+    val cands = urls("bcast", 80).union(
+      Seq[(String, Long)]((null, -1L), (null, -2L)).toDF("url", "payload"))
+    val seen = ((0 until 30).map(i => s"https://bcast.example.com/p/$i") ++
+      (0 until 12).map(i => s"https://elsewhere.example.com/s$i") :+ null).toDF("url")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("url", "payload").collect().map(_.toString).sorted.toSeq
+    val exact = rows(cands.join(seen.select(col("url").as("u")),
+      col("url") === col("u"), "left_anti"))
+    assert(exact.size == 52 && exact.count(_.startsWith("[null,")) == 2)
+    for (k <- Seq(4, 1))
+      assert(rows(Frontier.unseenByBloom(cands, seen, "url",
+        expectedSeen = 43, shards = k)) == exact, s"k=$k")
   }
 
   test("past MaxBloomShards the prefilter honestly falls back to the exact anti-join") {
@@ -231,8 +229,8 @@ class FrontierBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
         col("url") === col("u"), "left_anti")
       .select("url").collect().map(_.getString(0)).sorted.toSeq
     assert(out.select("url").collect().map(_.getString(0)).sorted.toSeq == exact)
-    // …and NO sketch literals in the plan (the infeasible-at-scale shape)
-    assert(!out.queryExecution.optimizedPlan.toString.contains("bloom_might_contain"))
+    // …and NO sketch probe in the plan (the infeasible-at-scale shape)
+    assert(!out.queryExecution.optimizedPlan.toString.contains("bloom_shard_probe"))
   }
 
   test("bloom_filter_agg / bloom_might_contain are reachable from SQL") {

@@ -314,8 +314,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       id.endsWith("/h3") && !kept && stage == "near_dup_batch" })
     assert(rows.count(_._2) == 6) // h1 h2 x3 x6 accepted + 2 passthroughs
 
-    val storeBefore = graft.ops.IncrementalDedup.openStore(spark, store)
-    val hashesBefore = storeBefore.hashes.collect().map(_.toString).sorted.toSeq
+    def storeRows() = {
+      val idx = graft.ops.IncrementalDedup.openStore(spark, store)
+      (idx.hashes.collect().map(_.toString).sorted.toSeq,
+        idx.sigs.collect().map(_.toString).sorted.toSeq)
+    }
+    val storeBefore = storeRows()
 
     // REPLAY micro-batch 1 (foreachBatch is at-least-once): rerun the sink
     // fn with the same batchId over the same extracted rows — ledger and
@@ -326,9 +330,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(p => graft.pipeline.ExtractJob.scrapeAny(p.url, p.html))
     StreamingExtract.incrementalDedupSink(store, ledger)(replayed, 1L)
     assert(ledgerRows() == rows, "replayed batch must leave the ledger unchanged")
-    val hashesAfter = graft.ops.IncrementalDedup.openStore(spark, store)
-      .hashes.collect().map(_.toString).sorted.toSeq
-    assert(hashesAfter == hashesBefore, "replayed batch must leave the store unchanged")
+    assert(storeRows() == storeBefore, "replayed batch must leave the store unchanged")
   }
 
   test("quality-gate stream verdicts equal the batch pass over the same pages") {
